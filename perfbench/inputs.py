@@ -9,18 +9,10 @@ up as a checksum mismatch instead of agreeing with itself.
 from __future__ import annotations
 
 import random
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-# The near-dup corpus uses the token vocabulary of the catalog's
-# ``documents`` table, so shingle overlap between unrelated documents is
-# as rare as it is there.
-DOC_VOCAB = (
-    "a agg batch big column customer data fast filter group hash join key "
-    "line merge order part query row scan slow small sort spark stream "
-    "table the value vector window"
-).split()
 
 _PROSE = (
     "alpha amber anchor apple arrow autumn basin beacon birch blossom breeze "
@@ -69,16 +61,15 @@ def html_page_rows(
     mode."""
     rng = random.Random(seed)
     hosts = _zipf_hosts(rng, n_rows)
+    nav = "".join(f'<li><a href="/s{k}">Section {k}</a></li>' for k in range(8))
+    footer = " | ".join(f'<a href="/f{k}">more link {k}</a>' for k in range(12))
     rows = []
     for i, host in enumerate(hosts):
         url = f"http://host{host}.example/a{i}"
         title = f"Article {i} {rng.choice(_PROSE)}"
-        nav = "".join(
-            f'<li><a href="/s{k}">Section {k}</a></li>' for k in range(8)
-        )
         paras, para_html = [], []
         for _ in range(paragraphs):
-            words = [rng.choice(_PROSE) for _ in range(rng.randint(4, 6))]
+            words = rng.choices(_PROSE, k=rng.randint(4, 6))
             j = rng.randrange(len(words))
             paras.append(" ".join(words))
             marked = words[:j] + [f"<b>{words[j]}</b>"] + words[j + 1:]
@@ -87,7 +78,6 @@ def html_page_rows(
         table = "<table><tr><th>name</th><th>count</th></tr>" + "".join(
             f"<tr><td>{a}</td><td>{b}</td></tr>" for a, b in cells
         ) + "</table>"
-        footer = " | ".join(f'<a href="/f{k}">more link {k}</a>' for k in range(12))
         html = (
             f"<!DOCTYPE html><html><head><title>{title}</title></head><body>"
             f'<nav><ul>{nav}</ul></nav><div class="main"><h1>{title}</h1>'
@@ -118,51 +108,31 @@ def html_pages(spark: SparkSession, n_rows: int, seed: int) -> tuple[DataFrame, 
     return pages, expected
 
 
-def documents(n_docs: int, seed: int) -> dict[str, list]:
-    """Columns of a ``documents`` table shaped like the catalog's sf0.1
-    one: 10-100 tokens drawn from ``DOC_VOCAB``, five languages, twenty
-    sources, and every twentieth document a copy of an earlier one with a
-    trailing ``dup`` token, so every near-dup operator has pairs to find."""
-    rng = random.Random(seed)
-    langs = ["en", "en", "en", "zh", "es", "fr", "de"]
-    texts: list[str] = []
-    originals: list[int] = []
-    for i in range(n_docs):
-        if i % 20 == 19:
-            # each original is copied at most once, so every duplicate
-            # cluster is a pair and the connected-components rounds do
-            # not depend on the seed
-            src = originals.pop(rng.randrange(len(originals)))
-            texts.append(texts[src] + " dup")
-        else:
-            originals.append(i)
-            texts.append(" ".join(rng.choices(DOC_VOCAB, k=rng.randint(10, 100))))
-    return {
-        "doc_id": list(range(n_docs)),
-        "text": texts,
-        "lang": [rng.choice(langs) for _ in range(n_docs)],
-        "source": [f"src{i % 20}" for i in range(n_docs)],
-        "n_chars": [len(t) for t in texts],
-    }
+DOCUMENTS = Path(__file__).resolve().parent / "data" / "documents.parquet"
+_CONSONANTS = "bcdfghjklm"
 
 
-def write_documents(sf_dir: str, n_docs: int, seed: int) -> None:
-    """``{sf_dir}/documents.parquet`` as one row group, the layout of the
-    catalog tables the ``queries`` functions read."""
+def write_documents(sf_dir: str, seed: int) -> int:
+    """``{sf_dir}/documents.parquet``: the catalog's sf0.1 ``documents``
+    table (5,000 docs, a copy kept under ``data/``) with the consonant
+    rotation of ``tools/make_scale_corpus.py`` keyed by the seed.
+
+    The rotation is a bijection on characters, so every pair's shingle
+    overlap, and with it the set of true near-duplicates, is the table's
+    own; what the seed moves is every hash, and so the minhash
+    signatures, the LSH band keys and which bands run hot. One row
+    group, the layout of the catalog tables the ``queries`` functions
+    read. Returns the number of docs."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    k = seed % len(_CONSONANTS)
+    table = str.maketrans(_CONSONANTS, _CONSONANTS[k:] + _CONSONANTS[:k])
+    docs = pq.read_table(DOCUMENTS)
+    text = pa.array([t.translate(table) for t in docs.column("text").to_pylist()], pa.string())
+    docs = docs.set_column(docs.schema.get_field_index("text"), "text", text)
     os.makedirs(sf_dir, exist_ok=True)
-    cols = documents(n_docs, seed)
-    table = pa.table(
-        {
-            "doc_id": pa.array(cols["doc_id"], pa.int64()),
-            "text": pa.array(cols["text"], pa.string()),
-            "lang": pa.array(cols["lang"], pa.string()),
-            "source": pa.array(cols["source"], pa.string()),
-            "n_chars": pa.array(cols["n_chars"], pa.int64()),
-        }
-    )
-    pq.write_table(table, f"{sf_dir}/documents.parquet", row_group_size=n_docs)
+    pq.write_table(docs, f"{sf_dir}/documents.parquet", row_group_size=docs.num_rows)
+    return docs.num_rows

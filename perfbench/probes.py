@@ -81,11 +81,11 @@ class SparkCounters:
                     heaviest = data
             if heaviest is not None:
                 task_ms += self._task_run_ms(store, heaviest)
-        for name, value in self._sql_metrics(set(jobs)):
+        for name, text in self._sql_metrics(set(jobs)):
             if name == "data sent to Python workers":
-                out["python_sent_mb"] += value / _MB
+                out["python_sent_mb"] += _sql_total(text) / _MB
             elif name == "data returned from Python workers":
-                out["python_received_mb"] += value / _MB
+                out["python_received_mb"] += _sql_total(text) / _MB
         out["task_ms"] = task_ms
         return out
 
@@ -100,8 +100,8 @@ class SparkCounters:
         return out
 
     def _sql_metrics(self, jobs: set[int]):
-        """(metric name, total) of every SQL execution that ran one of
-        ``jobs``."""
+        """(metric name, value as the status store formats it) of every
+        SQL execution that ran one of ``jobs``."""
         sql = self.spark._jsparkSession.sharedState().statusStore()
         execs = sql.executionsList()
         for i in range(execs.size()):
@@ -115,7 +115,7 @@ class SparkCounters:
                 m = metrics.apply(k)
                 v = values.get(m.accumulatorId())
                 if v.isDefined():
-                    yield m.name(), _sql_total(v.get())
+                    yield m.name(), v.get()
 
 
 def task_stats(task_ms: list[float]) -> dict:

@@ -6,24 +6,23 @@ the near-duplicate queries, on ``local[N]`` with N the usable cores.
 Load is a closed loop of one client: one job at a time, the next
 submitted when the last has finished. A run
 
-1. sets up three times (session start, Python-worker warm-up, seeded
-   input generation and materialisation) and keeps the last session;
-   the median of the three is ``setup_s``;
-2. computes the expected output of the inputs (untimed);
-3. runs one checked warm-up pass (JIT and code generation), then
-   checked passes back to back until ``--seconds`` have passed, and
-   reports the median of those;
+1. sets up once, launching its own JVM: session start, Python-worker
+   warm-up, seeded input generation and materialisation; their sum is
+   ``setup_s``;
+2. computes the expected output of the inputs while it warms up (both
+   untimed; the warm-up compiles code and warms the JIT);
+3. runs checked passes back to back until ``--seconds`` have passed,
+   and reports the median of those;
 4. prints one JSON object as the last line of stdout and writes it,
    with more detail, under ``perfbench/_work/results/``.
 
 ``--trace 0`` reports the end-to-end metrics, measured with tracing off.
 ``--trace 1`` reports the per-layer metrics and writes the spans to the
-results directory. After the warm-up pass, traced and untraced passes
-run in T U U T order, so the run measures its own tracing overhead
-without the drift of a warming JVM. A per-layer
-metric that a workload does not exercise reads 0: the queries layer on
-``extract_html_large``; the core, the extract split and the scaling
-proxy on ``neardup_sf01``.
+results directory. Traced and untraced passes run in T U T order, so
+the run measures its own tracing overhead without the drift of a
+warming JVM. A per-layer metric that a workload does not exercise reads
+0: the queries layer on ``extract_html_large``; the core, the extract
+split and the scaling proxy on ``neardup_sf01``.
 
 ``ok_frac`` is 1 - failed/attempted: the share of docs
 (``extract_html_large``) or output checks (``neardup_sf01``) that came
@@ -40,10 +39,10 @@ import shutil
 import statistics
 import sys
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from session import WORK, configure_environment
 
-SETUPS = 3
 CORE_SAMPLE = 100
 
 SPARK_COUNTERS = (
@@ -84,14 +83,14 @@ def core_timings(names: tuple[str, ...], samples: list[bytes], tracer, repeats: 
     return out
 
 
-def per_layer(wl, spark, tracer, passes, counters, setups, cpus, seed) -> dict:
+def per_layer(wl, spark, tracer, passes, counters, setup, cpus, seed) -> dict:
     """Every per-layer metric, from the traced passes and the traced
     run's extra measurements."""
     from probes import task_stats
     from workloads import Ctx, ExtractHtmlLarge, NeardupSf01, _Extract
 
     traced = [i for i, (t, _) in enumerate(passes) if t]
-    untraced = [p.job_s for i, (t, p) in enumerate(passes) if not t and i > 0]
+    untraced = [p.job_s for t, p in passes if not t]
     layer_of = [passes[i][1].layer for i in traced]
     per_pass = [counters[i] for i in traced]
     m: dict[str, float] = {}
@@ -121,7 +120,7 @@ def per_layer(wl, spark, tracer, passes, counters, setups, cpus, seed) -> dict:
     for k, v in task_stats([ms for c in per_pass for ms in c["task_ms"]]).items():
         m[f"pipeline.{k}"] = v
     for k, idx in (("session", 0), ("warm", 1), ("input", 2)):
-        m[f"pipeline.setup_{k}_s"] = _median([s[idx] for s in setups])
+        m[f"pipeline.setup_{k}_s"] = setup[idx]
 
     for op in NeardupSf01.OPS:
         for key in (f"queries.{op}_s", f"queries.{op}_rows"):
@@ -133,8 +132,13 @@ def per_layer(wl, spark, tracer, passes, counters, setups, cpus, seed) -> dict:
     for k in SPARK_COUNTERS:
         m[f"spark.{k}"] = _median([c[k] for c in per_pass])
 
+    # inside a pass the pipeline calls only build lazy DataFrames, all
+    # execution is charged to the spark.collect span, and the core is
+    # called from Python workers, out of the tracer's sight; so only these
+    # two layers have a self time, and the core's in-function cost is
+    # core.busy_s
     self_s = [tracer.self_seconds({i}) for i in traced]
-    for name in ("core", "pipeline", "queries", "spark"):
+    for name in ("queries", "spark"):
         m[f"{name}.self_s"] = _median([s.get(name, 0.0) for s in self_s])
     m["trace.overhead_s"] = job_traced - _median(untraced)
     return m
@@ -178,33 +182,35 @@ def main() -> int:
     tracer = Tracer(False)
     spark = None
     try:
-        setups = []
-        for _ in range(SETUPS):
-            if spark is not None:
-                spark.stop()
-            t0 = time.perf_counter()
-            spark = start_session(cpus)
-            t1 = time.perf_counter()
-            warm_python_workers(spark, cpus)
-            t2 = time.perf_counter()
-            wl.setup(spark)
-            t3 = time.perf_counter()
-            setups.append((t1 - t0, t2 - t1, t3 - t2))
-        spark.sparkContext.setJobGroup("check", "check")
-        wl.prepare_check(spark)
+        t0 = time.perf_counter()
+        spark = start_session(cpus)  # launches the JVM
+        t1 = time.perf_counter()
+        warm_python_workers(spark, cpus)
+        t2 = time.perf_counter()
+        wl.setup(spark)
+        t3 = time.perf_counter()
+        setup = (t1 - t0, t2 - t1, t3 - t2)
+
+        def prepare_check():
+            spark.sparkContext.setJobGroup("check", "check")
+            wl.prepare_check(spark)
 
         counters = SparkCounters(spark)
+        # the expected output is computed while the warm-up (untimed and
+        # unchecked: code generation and the JIT) runs
+        with ThreadPoolExecutor(1) as pool:
+            check = pool.submit(prepare_check)
+            wl.warm_up(Ctx(spark, tracer, -1))
+            check.result()
         passes, per_pass, rss = [], [], 0.0
-        # a warm-up pass, then at least one timed pass; with --trace 1,
-        # traced and untraced passes in T U U T order, so that the drift
-        # of a warming JVM cancels out of the overhead
-        min_passes = 5 if args.trace else 2
-        end = None
+        # checked passes until --seconds have passed; with --trace 1 at
+        # least three, traced and untraced in T U T order, so that the
+        # drift of a warming JVM cancels out of the overhead
+        min_passes = 3 if args.trace else 1
+        end = time.perf_counter() + args.seconds
         while len(passes) < min_passes or time.perf_counter() < end:
             i = len(passes)
-            if i == 1:
-                end = time.perf_counter() + args.seconds
-            tracer.enabled = bool(args.trace) and i > 0 and i % 4 in (0, 1)
+            tracer.enabled = bool(args.trace) and i % 2 == 0
             tracer.run_id = i
             # each pass starts from a collected heap on both sides, so no
             # pass pays for the garbage of set-up or of the pass before
@@ -226,17 +232,17 @@ def main() -> int:
         failed = sum(p.failed for _, p in passes)
         if args.trace:
             tracer.enabled = True
-            metrics = per_layer(wl, spark, tracer, passes, per_pass, setups, cpus, args.seed)
+            metrics = per_layer(wl, spark, tracer, passes, per_pass, setup, cpus, args.seed)
             metrics["host.loadavg_1m"] = loadavg
             metrics = {k: (v, _unit(k)) for k, v in metrics.items()}
         else:
-            job_s = _median([p.job_s for _, p in passes[1:]])
+            job_s = _median([p.job_s for _, p in passes])
             metrics = {
                 "job_s": (job_s, "s"),
                 "docs_per_s": (wl.docs / job_s, "docs/s"),
                 "ok_frac": (1 - failed / attempted, "ratio"),
                 "worker_peak_rss_mb": (rss, "MB"),
-                "setup_s": (_median([sum(s) for s in setups]), "s"),
+                "setup_s": (sum(setup), "s"),
             }
     finally:
         if spark is not None:
@@ -263,7 +269,7 @@ def main() -> int:
         pass_job_s=[p.job_s for _, p in passes],
         pass_traced=[t for t, _ in passes],
         pass_layer=[p.layer for _, p in passes],
-        setups_s=setups,
+        setup_s=setup,
     )
     (results / f"{stem}.json").write_text(json.dumps(detail, indent=1))
     if args.trace:

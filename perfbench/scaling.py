@@ -1,10 +1,12 @@
 """Scaling proxy for the N -> 4N executor criterion on one machine.
 
 The ``extract_xml_small`` job runs at local[1] and at local[4], each in
-a fresh process, with four times the rows at four times the cores. Next
-to it, the same per-doc core call runs in 1 and in 4 plain processes
-without Spark: the efficiency the machine itself allows for CPU-bound
-Python.
+a fresh process, with four times the rows at four times the cores and
+the same number of tasks per core, so the fixed cost of a task weighs
+the same at both sizes. Each child times its second pass. Next to it,
+the same per-doc core call runs in 1 and in 4 plain processes without
+Spark: the efficiency the machine itself allows for CPU-bound Python,
+which the Spark figure should not exceed.
 
     python3 perfbench/scaling.py --cpus 4 --rows 10000 --seed 1
 """
@@ -15,13 +17,15 @@ import argparse
 import json
 import os
 import shutil
+import statistics
 import subprocess
 import sys
 import time
 from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
-ROWS_PER_CPU = 2_500
+ROWS_PER_CPU = 20_000
+TASKS_PER_CPU = 8
 
 
 def _spark_run(cpus: int, rows: int, seed: int) -> dict:
@@ -79,11 +83,15 @@ def scaling_proxy(seed: int) -> dict:
     one = _spark_run(1, ROWS_PER_CPU, seed)
     four = _spark_run(4, 4 * ROWS_PER_CPU, seed)
     doc = one["sample"].encode()
-    c1 = _ceiling_docs_per_s(doc, 1)
-    c4 = _ceiling_docs_per_s(doc, 4)
+    # a round takes a few seconds and the machine's speed drifts between
+    # rounds, so the ceiling is the median of three interleaved ones
+    ceilings = [
+        _ceiling_docs_per_s(doc, 4) / (4 * _ceiling_docs_per_s(doc, 1))
+        for _ in range(3)
+    ]
     return {
         "scaling_eff_1to4": four["docs_per_s"] / (4 * one["docs_per_s"]),
-        "scaling_ceiling_1to4": c4 / (4 * c1),
+        "scaling_ceiling_1to4": statistics.median(ceilings),
     }
 
 
@@ -100,13 +108,13 @@ def _child(cpus: int, rows: int, seed: int) -> dict:
         warm_python_workers(spark, cpus)
         wl = ExtractXmlSmall(seed)
         wl.rows = rows
+        wl.repartition_to = TASKS_PER_CPU * cpus
         wl.setup(spark)
         wl.prepare_check(spark)
-        # one pass, cold at both sizes: a warm-up pass would double the
-        # local[1] child, the longest part of a traced run
-        p = wl.run_pass(Ctx(spark, Tracer(False), 0))
-        if p.failed:
-            raise RuntimeError(f"{p.failed} docs failed the output check")
+        for i in range(2):  # a warm-up pass, then the timed one
+            p = wl.run_pass(Ctx(spark, Tracer(False), i))
+            if p.failed:
+                raise RuntimeError(f"{p.failed} docs failed the output check")
         return {
             "cpus": cpus,
             "rows": rows,
