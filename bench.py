@@ -528,7 +528,21 @@ def _scaling_bench(rows_per_cpu: int) -> dict:
     }
 
 
+def _quiet_console_progress() -> None:
+    """Turn Spark's console progress bar off for every session this
+    script starts, the ``--extract-only`` children included (they
+    inherit the environment). The JVM reads the setting once, at launch,
+    and PySpark starts as a shell, which turns the bar on by default;
+    its redraws must not interleave with the one JSON result line."""
+    args = os.environ.get("PYSPARK_SUBMIT_ARGS", "pyspark-shell")
+    if "spark.ui.showConsoleProgress" not in args:
+        os.environ["PYSPARK_SUBMIT_ARGS"] = (
+            "--conf spark.ui.showConsoleProgress=false " + args
+        )
+
+
 def main() -> None:
+    _quiet_console_progress()
     parser = argparse.ArgumentParser()
     parser.add_argument("--scaling", action="store_true")
     parser.add_argument("--extract-only", action="store_true")

@@ -266,11 +266,66 @@ def test_simhash_pairs_word_cap_blocks_quadratic(spark, tmp_path):
     spark.createDataFrame(rows, "doc_id long, text string").write.mode(
         "overwrite"
     ).parquet(str(tmp_path / "documents.parquet"))
-    got = simhash_pairs(spark, str(tmp_path), word_cap=10).collect()
+    dropped = []
+    got = simhash_pairs(
+        spark, str(tmp_path), word_cap=10, on_dropped=dropped.append
+    ).collect()
     pairs = sorted((r.doc_a, r.doc_b) for r in got)
     assert pairs == [(100, 101)], pairs  # boilerplate buckets all dropped
+    # the 40 identical docs share one signature: its 4 (word_idx,
+    # word_val) buckets are the hot ones
+    assert dropped == [4]
     # without the cap, the identical docs go quadratic: C(40,2) + 1
     full = simhash_pairs(spark, str(tmp_path), word_cap=10**9)
+    assert full.count() == 40 * 39 // 2 + 1
+
+
+def test_winnow_pairs_fp_cap_reports_and_caches(spark, tmp_path):
+    """Boilerplate fingerprints shared by every page are dropped above
+    fp_cap while a genuine copied passage survives; ``on_dropped``
+    reports the hot-fingerprint count and ``cache_out`` hands back the
+    one persisted frame. The DuckDB twin applies the same cap."""
+    import duckdb
+
+    from xqspark.queries import q_winnow_pairs_sql, winnow_fp, winnow_pairs
+
+    boiler = "identical boilerplate words on every single page here"
+    rows = [(i, boiler) for i in range(40)]
+    passage = " ".join(f"tok{i}" for i in range(30))
+    rows += [(100, passage), (101, passage + " tail")]
+    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(str(tmp_path / "documents.parquet"))
+
+    dropped, cache = [], []
+    got = sorted(
+        tuple(r)
+        for r in winnow_pairs(
+            spark, str(tmp_path), fp_cap=10,
+            on_dropped=dropped.append, cache_out=cache,
+        ).collect()
+    )
+    assert [(a, b) for a, b, _ in got] == [(100, 101)]
+    # every fingerprint of the boilerplate doc has 40 members > fp_cap
+    n_boiler_fps = (
+        winnow_fp(spark, str(tmp_path)).filter("doc_id = 0").first().n_fps
+    )
+    assert n_boiler_fps > 1
+    assert dropped == [n_boiler_fps]
+
+    assert len(cache) == 1 and cache[0].is_cached
+    cache[0].unpersist(blocking=True)
+    assert not cache[0].is_cached
+
+    con = duckdb.connect()
+    con.sql(
+        "CREATE VIEW documents AS FROM "
+        f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+    )
+    assert got == sorted(con.sql(q_winnow_pairs_sql(fp_cap=10)).fetchall())
+
+    # without the cap the boilerplate goes quadratic: C(40,2) + 1 pairs
+    full = winnow_pairs(spark, str(tmp_path), fp_cap=10**9)
     assert full.count() == 40 * 39 // 2 + 1
 
 

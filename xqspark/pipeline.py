@@ -71,7 +71,7 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # r6 (guide §3.1/§9): allow shuffled-hash joins when a build
-        # side fits — the capped pair joins (band_cap/fp_cap/word_cap
+        # side fits — the capped pair joins (queries._sized_by_key caps
         # bound every build partition) were paying sort-merge sorts for
         # nothing; measured -0.2..-0.5 s per pair query at sf1.0
         .config("spark.sql.join.preferSortMergeJoin", "false")

@@ -970,6 +970,38 @@ def q_minhash_sig_sql():
     return _MINHASH_SQL_BODY + "SELECT doc_id, mh1, mh2, mh3, mh4 FROM sig"
 
 
+def _sized_by_key(
+    df: DataFrame,
+    keys: list[str],
+    cap: int,
+    on_dropped=None,
+    cache_out: list | None = None,
+) -> DataFrame:
+    """``df`` plus ``n_key``, the row count of each ``keys`` group — the
+    hot-key cap step shared by the capped self-joins (lsh_pairs,
+    winnow_pairs, embedding_neardup, simhash_pairs). The count is a
+    window over the same hashpartitioning(keys) the caller's self-join
+    needs, so the cap costs no extra shuffle of the big side; each
+    caller applies its own ``n_key <= cap`` filter.
+
+    ``on_dropped(n_hot_keys)`` — optional callback reporting how many
+    key groups exceed ``cap`` (no silent caps). It runs an extra action,
+    eagerly, before this returns, so the sized rows are persisted first
+    (and stay cached for the self-join); None skips both the action and
+    the caching. Pass ``cache_out`` (a list) to receive the persisted
+    DataFrame so you can unpersist it once the result is materialized.
+    """
+    sized = df.withColumn("n_key", F.count("*").over(W.partitionBy(*keys)))
+    if on_dropped is not None:
+        sized = sized.persist()
+        if cache_out is not None:
+            cache_out.append(sized)
+        on_dropped(
+            sized.filter(F.col("n_key") > cap).select(*keys).distinct().count()
+        )
+    return sized
+
+
 def lsh_pairs(
     spark,
     sf_dir,
@@ -985,36 +1017,16 @@ def lsh_pairs(
     n^2 scan). Hot bands — the degenerate signatures that boilerplate or
     near-empty docs share — are DROPPED above ``band_cap`` members
     (standard LSH practice: a band with k members emits k(k-1)/2 pairs,
-    so one hot band goes quadratic). The membership count is a window
-    over the same hashpartitioning(band) the self-join needs, so the cap
-    costs no extra shuffle of the big side.
+    so one hot band goes quadratic; _sized_by_key counts members).
 
-    ``on_dropped(n_hot_bands)`` — optional callback so batch drivers can
-    log how many bands the cap removed. It runs an extra action, so the
-    banded rows are persisted first (and stay cached for the self-join);
-    None skips both the action and the caching. Pass ``cache_out`` (a
-    list) to receive the persisted DataFrame so you can unpersist it
-    once the result is materialized.
+    ``on_dropped(n_hot_bands)`` / ``cache_out``: see _sized_by_key.
     """
     sig = _minhash_sig(spark, sf_dir, n_hashes=n_bands * n_rows)
     # '#' separator inside band_keys_df: mh values are variable-width
     # decimals, so plain concat would alias ("1","23") with ("12","3")
     bands = band_keys_df(sig, n_bands, n_rows)
-    sized = bands.withColumn(
-        "n_band", F.count("*").over(W.partitionBy("band"))
-    )
-    if on_dropped is not None:
-        sized = sized.persist()
-        if cache_out is not None:
-            cache_out.append(sized)
-        n_hot = (
-            sized.filter(F.col("n_band") > band_cap)
-            .select("band")
-            .distinct()
-            .count()
-        )
-        on_dropped(n_hot)
-    ok = sized.filter(F.col("n_band") <= band_cap).select("doc_id", "band")
+    sized = _sized_by_key(bands, ["band"], band_cap, on_dropped, cache_out)
+    ok = sized.filter(F.col("n_key") <= band_cap).select("doc_id", "band")
     left = ok.alias("a")
     right = ok.alias("b")
     result = (
@@ -1861,6 +1873,22 @@ def _gram_hash_expr(k: int) -> str:
     )
 
 
+def _segment_lens(offs, need: int, kernel: str):
+    """Per-row list lengths from Arrow list ``offs``, checked against the
+    kernel's precondition: every row needs >= ``need`` elements. Without
+    it, ``reduceat`` silently returns the NEXT row's value for an empty
+    row (IndexError on a trailing one) and a window slice fails with an
+    unrelated message, so correctness would rest on distant callers'
+    ``size(t) >= k`` filters."""
+    lens = offs[1:] - offs[:-1]
+    if lens.min() < need:
+        raise ValueError(
+            f"{kernel}: every row needs a list of >= {need} elements,"
+            f" got one of {int(lens.min())}"
+        )
+    return lens
+
+
 def _winnow_fps_kernel(w: int):
     """mapInArrow kernel for the winnowing fingerprint selection: the
     input column is the JVM-computed k-gram base hash array
@@ -1880,6 +1908,7 @@ def _winnow_fps_kernel(w: int):
                 continue
             harr = b.column(1)
             offs = harr.offsets.to_numpy(zero_copy_only=False)
+            _segment_lens(offs, w, "_winnow_fps_kernel")
             flat = harr.flatten().to_numpy(zero_copy_only=False)
             base = offs[0]
             out = []
@@ -1916,8 +1945,8 @@ def _simhash_kernel():
             if b.num_rows == 0:
                 continue
             offs = b.column(1).offsets.to_numpy(zero_copy_only=False)
+            lens = _segment_lens(offs, 1, "_simhash_kernel")
             starts = offs[:-1] - offs[0]
-            lens = np.diff(offs)
             cols = []
             for wd in range(4):
                 flat = (
@@ -1967,6 +1996,7 @@ def _minhash_kernel(n_hashes: int, id_col: str = "doc_id"):
             harr = b.column(1)
             flat = harr.flatten().to_numpy(zero_copy_only=False)
             offs = harr.offsets.to_numpy(zero_copy_only=False)
+            _segment_lens(offs, 1, "_minhash_kernel")
             starts = offs[:-1] - offs[0]
             perm = (A * flat[None, :] + B) % _MERSENNE31
             mins = np.minimum.reduceat(perm, starts, axis=1)
@@ -2051,10 +2081,7 @@ def winnow_pairs(
     3,271 pairs share exactly one fingerprint, the real copy tail runs
     2..40+).
 
-    ``on_dropped(n_hot_fps)`` / ``cache_out`` follow the lsh_pairs
-    contract: no-silent-caps reporting of how many corpus-wide
-    fingerprints the cap removed, at the cost of one extra action over
-    the persisted exploded stream.
+    ``on_dropped(n_hot_fps)`` / ``cache_out``: see _sized_by_key.
 
     explode_OUTER on purpose (r5, 44x): plain explode makes Catalyst
     infer a ``size(fps) > 0`` pruning filter and push it to the scan,
@@ -2069,19 +2096,8 @@ def winnow_pairs(
         .select("doc_id", F.explode_outer("fps").alias("fp"))
         .filter(F.col("fp").isNotNull())
     )
-    sized = ex.withColumn("n_fp", F.count("*").over(W.partitionBy("fp")))
-    if on_dropped is not None:
-        sized = sized.persist()
-        if cache_out is not None:
-            cache_out.append(sized)
-        n_hot = (
-            sized.filter(F.col("n_fp") > fp_cap)
-            .select("fp")
-            .distinct()
-            .count()
-        )
-        on_dropped(n_hot)
-    ok = sized.filter(F.col("n_fp") <= fp_cap).select("doc_id", "fp")
+    sized = _sized_by_key(ex, ["fp"], fp_cap, on_dropped, cache_out)
+    ok = sized.filter(F.col("n_key") <= fp_cap).select("doc_id", "fp")
     a = ok.select(F.col("doc_id").alias("doc_a"), "fp")
     b = ok.select(F.col("doc_id").alias("doc_b"), "fp")
     return (
@@ -2205,32 +2221,17 @@ def embedding_neardup(
     quadratic control and near-dup pairs within a shard survive; pairs
     straddling shards are sacrificed (the standard bounded-recall trade;
     the DuckDB oracle twins the exact same rule). The membership count
-    is a window over the same hashpartitioning(label) the drop-mode
-    self-join needs, so the cap costs no extra shuffle of the big side;
+    (_sized_by_key) shares the drop-mode self-join's partitioning;
     sub-bucket mode re-keys the join on (label, sub) and accepts one
     extra exchange in return for not losing hot clusters outright.
 
-    ``on_dropped(n_hot_labels)`` + ``cache_out`` follow the lsh_pairs
-    contract (persist before the extra action; caller unpersists)."""
+    ``on_dropped(n_hot_labels)`` / ``cache_out``: see _sized_by_key."""
     emb = _emb(spark, sf_dir).select(
         "vec_id", F.col("embedding").alias("v"), "label"
     )
-    sized = emb.withColumn(
-        "n_label", F.count("*").over(W.partitionBy("label"))
-    )
-    if on_dropped is not None:
-        sized = sized.persist()
-        if cache_out is not None:
-            cache_out.append(sized)
-        n_hot = (
-            sized.filter(F.col("n_label") > label_cap)
-            .select("label")
-            .distinct()
-            .count()
-        )
-        on_dropped(n_hot)
+    sized = _sized_by_key(emb, ["label"], label_cap, on_dropped, cache_out)
     if n_sub is None:
-        ok = sized.filter(F.col("n_label") <= label_cap).select(
+        ok = sized.filter(F.col("n_key") <= label_cap).select(
             "vec_id", "v", "label"
         )
         key = ["label"]
@@ -2249,7 +2250,7 @@ def embedding_neardup(
             "vec_id",
             "v",
             "label",
-            F.when(F.col("n_label") <= label_cap, F.lit(0)).otherwise(sub).alias("sub"),
+            F.when(F.col("n_key") <= label_cap, F.lit(0)).otherwise(sub).alias("sub"),
         )
         key = ["label", "sub"]
     ok = _with_norm(ok, "v", "vn")
@@ -3268,7 +3269,9 @@ def simhash_pairs(
     empty docs collapsing to the same signature word) are bounded by
     ``word_cap`` via the same count-window-on-the-join-partitioning
     trick as lsh_pairs' band_cap. At 100 TB: one shuffle keyed on the
-    16-bit words, never quadratic outside capped buckets."""
+    16-bit words, never quadratic outside capped buckets.
+
+    ``on_dropped(n_hot_words)`` / ``cache_out``: see _sized_by_key."""
     sig = q_simhash(spark, sf_dir)
     melted = sig.select(
         "doc_id",
@@ -3277,23 +3280,8 @@ def simhash_pairs(
             F.array(*[F.col(f"simhash_w{w}") for w in range(4)])
         ).alias("wi", "wv"),
     )
-    sized = melted.withColumn(
-        "n_w", F.count("*").over(W.partitionBy("wi", "wv"))
-    )
-    if on_dropped is not None:
-        # no-silent-caps: report how many (word_idx, word_val) buckets
-        # the cap removed (lsh_pairs on_dropped contract)
-        sized = sized.persist()
-        if cache_out is not None:
-            cache_out.append(sized)
-        n_hot = (
-            sized.filter(F.col("n_w") > word_cap)
-            .select("wi", "wv")
-            .distinct()
-            .count()
-        )
-        on_dropped(n_hot)
-    ok = sized.filter(F.col("n_w") <= word_cap).drop("n_w")
+    sized = _sized_by_key(melted, ["wi", "wv"], word_cap, on_dropped, cache_out)
+    ok = sized.filter(F.col("n_key") <= word_cap).drop("n_key")
     a = ok.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"simhash_w{w}").alias(f"a{w}") for w in range(4)],

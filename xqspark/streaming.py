@@ -15,12 +15,10 @@ state is evicted at scale.
 
 from __future__ import annotations
 
-import logging
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-_LOG = logging.getLogger("xqspark")
 
 from .pipeline import PAGES_SCHEMA, extract_pages, with_host_salt, with_part_key
 
@@ -93,71 +91,8 @@ def _bloom_add(buf: bytearray, idxs) -> None:
         buf[i >> 3] |= 1 << (i & 7)
 
 
-def _tws_available() -> bool:
-    """transformWithStateInPandas' Python state server speaks protobuf;
-    containers without google.protobuf can only run the
-    applyInPandasWithState engine (import-try gate, not a version
-    check: pyspark 4 is present either way)."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 _OUT_SCHEMA_DDL = "url string, warc_ts timestamp, html binary, lang string"
 _STATE_SCHEMA_DDL = "cur binary, prev binary, n_cur long, last_ms long"
-
-
-def _bloom_state_fns(bloom_bits: int, bloom_hashes: int, ttl_ms: int):
-    """(load, filter_batch, pack) closures shared by both streaming
-    engines — the Bloom-generation dedup logic and the READ-TIME TTL
-    rule live here once, so engine choice cannot change semantics.
-
-    TTL is enforced on state READ (the same rule transformWithState's
-    native ttlDurationMs applies): state older than ttl_ms reads back
-    as absent. No processing-time TIMERS anywhere — timer cleanup
-    batches are what made applyInPandasWithState + ProcessingTimeTimeout
-    never terminate under trigger(availableNow); read-time expiry
-    drains and stops."""
-    import time as _time
-
-    capacity = max(1, bloom_bits // (4 * bloom_hashes))
-    n_bytes = bloom_bits >> 3
-
-    def load(stored):
-        """stored: (cur, prev, n_cur, last_ms) tuple or None."""
-        if stored is not None:
-            cur_b, prev_b, n_cur, last_ms = stored
-            if ttl_ms <= 0 or (_time.time() * 1000 - last_ms) <= ttl_ms:
-                return bytearray(cur_b), bytes(prev_b), n_cur
-        return bytearray(n_bytes), bytes(n_bytes), 0
-
-    def filter_batch(batch, cur, prev, n_cur):
-        """-> (fresh_rows_df, cur, prev, n_cur)"""
-        import pandas as pd
-
-        mask = []
-        for url in batch["url"]:
-            idxs = _bloom_indexes(url, bloom_bits, bloom_hashes)
-            if _bloom_has(cur, idxs) or _bloom_has(prev, idxs):
-                mask.append(False)
-                continue
-            _bloom_add(cur, idxs)
-            n_cur += 1
-            if n_cur >= capacity:  # rotate generations
-                prev = bytes(cur)
-                cur = bytearray(n_bytes)
-                n_cur = 0
-            mask.append(True)
-        fresh = batch[pd.Series(mask, index=batch.index)]
-        return fresh[["url", "warc_ts", "html", "lang"]], cur, prev, n_cur
-
-    def pack(cur, prev, n_cur):
-        return (bytes(cur), prev, n_cur, int(_time.time() * 1000))
-
-    return load, filter_batch, pack
 
 
 def dedup_stream(
@@ -165,10 +100,9 @@ def dedup_stream(
     ttl_minutes: float = 0,
     bloom_bits: int = 1 << 20,
     bloom_hashes: int = 4,
-    engine: str | None = None,
 ) -> DataFrame:
     """Custom stateful operator: cross-microbatch first-seen URL dedup,
-    keyed by url-host.
+    keyed by url-host, on applyInPandasWithState.
 
     State per host is BOUNDED at 2 x bloom_bits/8 bytes regardless of how
     many URLs the host has seen: two rotating-generation Bloom filters
@@ -181,93 +115,51 @@ def dedup_stream(
     trade (0.2% loss for O(1) state on a 10^8-url host) is the standard
     one. For exact small-scale dedup use batch `dedup_groups`.
 
-    ``engine`` (r5): ``"tws"`` = Spark 4 transformWithStateInPandas
-    (RocksDB state store; requires google.protobuf for the Python state
-    server), ``"apply"`` = applyInPandasWithState, ``None`` = tws when
-    protobuf is importable else apply. Both engines run the SAME
-    closures from _bloom_state_fns, so results are identical.
-
-    ttl_minutes > 0 is whole-state READ-TIME expiry in BOTH engines: a
-    host whose state wasn't updated within the TTL reads back as absent
-    and its URLs re-pass. No processing-time timers — the old
-    ProcessingTimeTimeout path kept scheduling "no new data" cleanup
-    batches so a drain-and-stop trigger never terminated; read-time TTL
-    terminates under ``trigger(availableNow=True)`` and is covered by
+    ttl_minutes > 0 is whole-state READ-TIME expiry: a host whose state
+    wasn't updated within the TTL reads back as absent and its URLs
+    re-pass. No processing-time timers — the old ProcessingTimeTimeout
+    path kept scheduling "no new data" cleanup batches so a
+    drain-and-stop trigger never terminated; read-time TTL terminates
+    under ``trigger(availableNow=True)`` and is covered by
     test_streaming.py::test_dedup_stream_ttl_expiry_under_available_now.
 
     UPGRADE NOTE: checkpoint state is NOT portable — the r5 state tuple
     gained ``last_ms`` (old (cur, prev, n_cur) checkpoints are
-    incompatible, as was the r2 array->Bloom change), and the two
-    engines' state layouts differ from each other. Discard the
-    checkpoint directory and reprocess when switching."""
-    ttl_ms = int(ttl_minutes * 60 * 1000) if ttl_minutes > 0 else 0
-    load, filter_batch, pack = _bloom_state_fns(bloom_bits, bloom_hashes, ttl_ms)
-    if engine is None:
-        engine = "tws" if _tws_available() else "apply"
-    keyed = with_host_salt(pages).select("host", "url", "warc_ts", "html", "lang")
-
-    if engine == "tws":
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class _BloomDedup(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                # TTL is applied by load() at read time (identical rule
-                # to native ttlDurationMs, shared with the apply engine)
-                self._bloom = handle.getValueState("bloom", _STATE_SCHEMA_DDL)
-
-            def handleInputRows(self, key, rows, timer_values):
-                cur, prev, n_cur = load(self._bloom.get())
-                for batch in rows:
-                    fresh, cur, prev, n_cur = filter_batch(
-                        batch, cur, prev, n_cur
-                    )
-                    if len(fresh):
-                        yield fresh
-                self._bloom.update(pack(cur, prev, n_cur))
-
-            def close(self) -> None:
-                pass
-
-        # transformWithState runs on the RocksDB state store only.
-        # SESSION-WIDE side effect (r6 advisor note): this changes the
-        # state store provider for every OTHER streaming query started
-        # on the same session afterwards. Only set it when the caller
-        # has not already configured a provider, so an explicit choice
-        # is never silently overridden; callers running mixed streaming
-        # workloads should set the provider themselves per query.
-        conf = pages.sparkSession.conf
-        if conf.get("spark.sql.streaming.stateStore.providerClass", None) is None:
-            _LOG.info(
-                "dedup_stream(tws): setting session state store provider"
-                " to RocksDB (required by transformWithState)"
-            )
-            conf.set(
-                "spark.sql.streaming.stateStore.providerClass",
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider",
-            )
-        return keyed.groupBy("host").transformWithStateInPandas(
-            _BloomDedup(),
-            outputStructType=_OUT_SCHEMA_DDL,
-            outputMode="append",
-            timeMode="None",
-        )
-
-    if engine != "apply":
-        raise ValueError(f"dedup_stream engine must be tws|apply|None: {engine}")
-
+    incompatible, as was the r2 array->Bloom change). Discard the
+    checkpoint directory and reprocess when the state layout changes."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+    ttl_ms = int(ttl_minutes * 60 * 1000) if ttl_minutes > 0 else 0
+    capacity = max(1, bloom_bits // (4 * bloom_hashes))
+    n_bytes = bloom_bits >> 3
+    keyed = with_host_salt(pages).select("host", "url", "warc_ts", "html", "lang")
+
     def dedup(key, batches, state: GroupState):
-        cur, prev, n_cur = load(state.get if state.exists else None)
+        import pandas as pd
+
+        cur, prev, n_cur = bytearray(n_bytes), bytes(n_bytes), 0
+        if state.exists:
+            cur_b, prev_b, stored_n, last_ms = state.get
+            if ttl_ms <= 0 or (time.time() * 1000 - last_ms) <= ttl_ms:
+                cur, prev, n_cur = bytearray(cur_b), bytes(prev_b), stored_n
         for batch in batches:
-            fresh, cur, prev, n_cur = filter_batch(batch, cur, prev, n_cur)
+            mask = []
+            for url in batch["url"]:
+                idxs = _bloom_indexes(url, bloom_bits, bloom_hashes)
+                if _bloom_has(cur, idxs) or _bloom_has(prev, idxs):
+                    mask.append(False)
+                    continue
+                _bloom_add(cur, idxs)
+                n_cur += 1
+                if n_cur >= capacity:  # rotate generations
+                    prev = bytes(cur)
+                    cur = bytearray(n_bytes)
+                    n_cur = 0
+                mask.append(True)
+            fresh = batch[pd.Series(mask, index=batch.index)]
             if len(fresh):
-                yield fresh
-        state.update(pack(cur, prev, n_cur))
+                yield fresh[["url", "warc_ts", "html", "lang"]]
+        state.update((bytes(cur), prev, n_cur, int(time.time() * 1000)))
 
     return keyed.groupBy("host").applyInPandasWithState(
         dedup,
