@@ -6,10 +6,12 @@ $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
---scaling: runs the SAME extraction job at local[8] and local[32] (fresh
-JVM each, via subprocess) on the same deterministic synthetic pages table
-and reports throughput at both plus efficiency = rate(4N) / (4 * rate(N))
-— the sandbox proxy for the north rule's N -> 4N executor criterion.
+--scaling: runs the SAME extraction job at local[N] and local[4N] with
+4N = the usable cores (local[1] -> local[4] on 4 cores, local[8] ->
+local[32] on 32), plus local[1] and local[4], each in a fresh JVM via
+subprocess, on the same deterministic synthetic pages table, and reports
+throughput at each plus efficiency = rate(4N) / (4 * rate(N)) — the
+sandbox proxy for the north rule's N -> 4N executor criterion.
 
 --extract-only: internal child mode for --scaling.
 """
@@ -454,7 +456,7 @@ def skew_ratio(spark, rows: int = 20000) -> dict:
     }
 
 
-def _mp_ceiling(procs_pairs=((1, 4), (8, 32))) -> dict:
+def _mp_ceiling(procs_pairs) -> dict:
     """No-Spark multiprocessing throughput of the same per-doc extraction:
     the HARDWARE scaling ceiling of this VM for CPU-bound Python work.
     Any Spark number must be read against this (cloud vCPUs throttle
@@ -495,8 +497,12 @@ def _mp_work(args):
 
 
 def _scaling_bench(rows_per_cpu: int) -> dict:
+    # N -> 4N from the usable cores: 4N fills them, N is a quarter
+    n = max(1, len(os.sched_getaffinity(0)) // 4)
+    n4 = 4 * n
+    pair = f"{n}to{n4}"
     results = {}
-    for cpus in (1, 4, 8, 32):
+    for cpus in sorted({1, 4, n, n4}):
         rows = rows_per_cpu * cpus
         out = subprocess.run(
             [sys.executable, __file__, "--extract-only", "--cpus", str(cpus), "--rows", str(rows)],
@@ -510,19 +516,19 @@ def _scaling_bench(rows_per_cpu: int) -> dict:
     def eff(n: int, n4: int, key: str = "docs_per_sec") -> float:
         return round(results[n4][key] / (4 * results[n][key]), 3)
 
-    ceiling = _mp_ceiling()
-    eff_8_32 = eff(8, 32, "udf_stage_docs_per_sec")
+    ceiling = _mp_ceiling(sorted({(1, 4), (n, n4)}))
+    eff_pair = eff(n, n4, "udf_stage_docs_per_sec")
     return {
-        "metric": "scaling_efficiency_local8_to_local32",
-        "value": eff_8_32,
+        "metric": f"scaling_efficiency_local{n}_to_local{n4}",
+        "value": eff_pair,
         "unit": "ratio",
         "efficiency_1to4_full": eff(1, 4),
-        "efficiency_8to32_full": eff(8, 32),
+        f"efficiency_{pair}_full": eff(n, n4),
         "efficiency_1to4_udf_stage": eff(1, 4, "udf_stage_docs_per_sec"),
-        "efficiency_8to32_udf_stage": eff_8_32,
+        f"efficiency_{pair}_udf_stage": eff_pair,
         "hardware_ceiling_no_spark": ceiling,
-        "relative_to_ceiling_8to32": round(
-            eff_8_32 / ceiling["8to32"]["efficiency"], 3
+        f"relative_to_ceiling_{pair}": round(
+            eff_pair / ceiling[pair]["efficiency"], 3
         ),
         "runs": {str(c): results[c] for c in results},
     }

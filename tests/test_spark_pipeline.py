@@ -106,6 +106,37 @@ def test_extract_pipeline_and_lineage(spark):
     assert all(r["errors"] == 0 for r in lin)
 
 
+def test_reused_workers_start_tasks_without_zip_finders(spark):
+    """A worker that has run an xqspark UDF carries the zip-finder hook
+    (xqspark/_imports.py), so PySpark's per-task invalidate_caches() leaves
+    it no zip finder to re-read. The probe looks before importing
+    anything of its own."""
+    pages = synthesize_pages(spark, n_rows=200, n_hosts=10)
+    extract_pages(pages, mode="xpath", query="//title", n_buckets=8).collect()
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        hooked = any(type(f).__module__ == "xqspark._imports" for f in sys.meta_path)
+        zips = sum(
+            isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()
+        )
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"hooked": [hooked], "zip_finders": [zips]})
+
+    rows = spark.range(0, 16, 1, 16).mapInPandas(
+        probe, "hooked boolean, zip_finders long"
+    ).collect()
+    hooked = [r["zip_finders"] for r in rows if r["hooked"]]
+    assert hooked, rows
+    assert hooked == [0] * len(hooked), rows
+
+
 def test_malformed_rows_contained(spark):
     rows = [
         ("ok", None, b"<a><b>x</b></a>", "", "en"),

@@ -6,4 +6,8 @@ wrapped in vectorized Arrow/pandas UDFs over tables of Common-Crawl-style
 pages.
 """
 
+from . import _imports
+
+_imports.install()
+
 __version__ = "0.1.0"

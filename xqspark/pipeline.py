@@ -21,6 +21,9 @@ Design notes for 1000-executor / 100 TB runs:
   would OOM Python workers).
 - The html blob column is pruned immediately after extraction; lineage
   and metrics queries never read it (column pruning reaches the scan).
+- Importing xqspark in a worker installs a hook (_imports.py) that keeps
+  PySpark's per-task invalidate_caches() from re-reading every zip and
+  jar on sys.path: 0.2-0.4 s per task before CPython 3.13.
 - No Iceberg jar ships in this sandbox: catalog I/O falls back to an
   identical-schema parquet layout behind the same read/write helpers.
 """
